@@ -3369,14 +3369,15 @@ def q227_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank_parts (r16, the q296/q297 recipe): the ~75k-row calibration
     # residual ranking exchange is ~1 MB — the band AQE byte-coalescing
     # folds onto ONE task; the pin keeps it at the spread width.
-    # Single-file-gated: None on a production multi-file table.
+    # Single-file-gated: 0 (off) on a production multi-file table. The
+    # lineitem file's size is only a proxy for the layout, not the size
+    # of the ranked residual relation.
     from docling_api_spark.tables import _scan_spread_parts
 
     qh = distributed_grouped_quantiles(
         resid, ["priority"], "r", [0.9], block_width="auto",
         pre_reduce="auto", probe_key=f"q227:{sf_dir}",
-        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/lineitem.parquet")
-        or None,
+        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/lineitem.parquet"),
     ).select("priority", (F.col("c")[0] / 100.0).alias("qhat_dollars"))
     return (
         resid.groupBy("priority", "k", "beta", "alpha")
@@ -6721,14 +6722,15 @@ def q297_mean_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width so AQE's byte-coalescing can't serialize the whole blocked
     # ranking onto one task (r15 profile: 4 serial single-task stages).
     # _scan_spread_parts gates it on the single-file bench layout — a
-    # multi-file production orders table passes 0 → None, keeping AQE's
-    # byte-correct sizing at scale.
+    # multi-file production orders table passes 0 (off), keeping AQE's
+    # byte-correct sizing at scale. The orders file's size is only a proxy
+    # for the layout, not the size of the ranked relation.
     from docling_api_spark.tables import _scan_spread_parts
 
     th = distributed_quantiles(
         v, "c", [0.9, 0.95, 0.99], block_width="auto",
         pre_reduce="auto", probe_key=f"q297:{sf_dir}",
-        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/orders.parquet") or None,
+        rank_parts=_scan_spread_parts(spark, f"{sf_dir}/orders.parquet"),
     )
     pts = th.selectExpr(
         "stack(3, CAST(0.90 AS DOUBLE), c[0], CAST(0.95 AS DOUBLE), c[1],"

@@ -424,6 +424,17 @@ def convert_documents(
     (potentially ~100 MB) documents sit in executor memory at once — the
     Spark analog of the reference's lazy convert_all iterator
     (service.py:171-177).
+
+    Wave rule (batch input): each Python task pays a fixed worker hand-off
+    before any document converts, so the stage runs in whole waves. The
+    target is max(defaultParallelism, ceil(estimated input bytes /
+    spark.sql.files.maxPartitionBytes)), the byte estimate being Catalyst's
+    (no job). A narrow input with more partitions than that — a scan of
+    many small files, each padded to spark.sql.files.openCostInBytes — is
+    `coalesce`d to the target: narrow, so no shuffle, and no task grows past
+    what byte-based splitting would give it. Streaming inputs, inputs whose
+    partition count a shuffle decides, and inputs at or under the target
+    are left as they are.
     """
     import pandas as pd
 
@@ -459,4 +470,35 @@ def convert_documents(
                 )
             yield pd.DataFrame(out)
 
-    return df.select("path", "content").mapInPandas(run, CONVERSION_OUTPUT_SCHEMA)
+    return _whole_waves(df).select("path", "content").mapInPandas(
+        run, CONVERSION_OUTPUT_SCHEMA
+    )
+
+
+def _whole_waves(df):
+    """`df` coalesced to one wave of tasks per the wave rule above."""
+    if df.isStreaming:
+        return df
+    qe = df._jdf.queryExecution()
+    if not _is_narrow(qe.executedPlan()):
+        return df
+    parts = qe.toRdd().getNumPartitions()
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    est = int(str(qe.optimizedPlan().stats().sizeInBytes()))
+    target = max(
+        df.sparkSession.sparkContext.defaultParallelism,
+        -(-est // conf.filesMaxPartitionBytes()),
+    )
+    return df.coalesce(target) if parts > target else df
+
+
+def _is_narrow(plan) -> bool:
+    """True when no exchange, adaptive stage or subquery is in `plan`, so
+    its partition count is known without running a job."""
+    name = plan.nodeName()
+    if "Exchange" in name or name == "AdaptiveSparkPlan":
+        return False
+    if not plan.subqueries().isEmpty():
+        return False
+    kids = plan.children()
+    return all(_is_narrow(kids.apply(i)) for i in range(kids.size()))

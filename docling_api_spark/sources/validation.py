@@ -6,7 +6,8 @@ Reference semantics (`upload_validation.py:20-98`) re-expressed as dataflow:
 - batch budget (default 500 MB): files are debited against the budget in a
   deterministic order; rows past the point of exhaustion are rejected (F2 —
   the sequential-debit behavior of `_read_document_with_limit`,
-  upload_validation.py:54-63, expressed as a running-sum window);
+  upload_validation.py:54-63, expressed as a per-batch running-sum window
+  or, for one global budget, a cut key found from metadata);
 - rejected rows are ROUTED, not dropped — errors surface to the caller
   (error-as-column, F9).
 
@@ -48,17 +49,23 @@ def with_size_validation(
     reference's read-loop debit (upload_validation.py:54-63). Oversized
     files are rejected outright and do not consume budget.
 
-    Scale posture (round-1 fix): the naive `partitionBy(lit(1))` running sum
-    is a single-partition global window — Catalyst folds the constant into
-    an empty partition spec and funnels the whole dataset through one task.
-    Instead:
+    Scale posture: no single-partition window (a `partitionBy(lit(1))`
+    running sum folds to an empty partition spec and funnels the dataset
+    through one task).
     - `max_batch_bytes=None` (unbounded budget): no running sum at all;
     - `batch_col` given: per-batch window (batches are bounded);
-    - global budget over the whole dataset: a two-pass distributed prefix
-      sum — a column-pruned stats pass computes per-range partial sums,
-      the driver folds them into per-range offsets (one tiny collect), and
-      the main pass adds a *range-partitioned* window to the broadcast
-      offset. No single-partition stage anywhere.
+    - global budget over the whole dataset: a cut key, found from metadata
+      alone (see `_budget_cut`). The running debit never decreases and
+      oversized files debit 0, so the rows the budget rejects are exactly
+      a suffix of `order_col` order: every row at or past the first key
+      whose running debit exceeds the budget. The returned plan is the
+      input plus one narrow projection, `order_col >= cut` — no window,
+      no exchange, and `content` is never read to find the cut.
+
+    Tie rule (global budget): rows with equal `order_col` values are
+    debited together, as one group, like SQL's default `RANGE` frame. A
+    tied group is admitted only if all of it fits, so tied rows always
+    share one fate. Null keys sort first.
     """
     size = F.col(size_col)
     too_large = F.when(size > max_file_bytes, F.lit(FILE_TOO_LARGE))
@@ -76,113 +83,85 @@ def with_size_validation(
             .orderBy(order_col)
             .rowsBetween(W.unboundedPreceding, W.currentRow)
         )
-        running = F.sum(debit).over(w)
+        over_budget = F.sum(debit).over(w) > max_batch_bytes
     else:
-        df, running = _with_global_running_sum(df, debit, order_col)
+        over_budget = _budget_cut(df, debit, order_col, max_batch_bytes)
 
     reason = (
-        too_large.when(running > max_batch_bytes, F.lit(BATCH_BUDGET_EXCEEDED))
+        too_large.when(over_budget, F.lit(BATCH_BUDGET_EXCEEDED))
         .otherwise(F.lit(None).cast("string"))
     )
-    return df.withColumn("reject_reason", reason).drop(
-        "_sv_lows", "_sv_offs", "_sv_idx"
-    )
+    return df.withColumn("reject_reason", reason)
 
 
-def _with_global_running_sum(
-    df: DataFrame, debit: Column, order_col: str
-) -> tuple[DataFrame, Column]:
-    """Distributed prefix sum of `debit` in global `order_col` order.
-    Returns (df with helper columns `_sv_lows/_sv_offs/_sv_idx`, running).
+def _budget_cut(
+    df: DataFrame, debit: Column, order_col: str, budget: int
+) -> Column:
+    """The predicate `order_col >= cut`, where `cut` is the first key whose
+    running debit (all rows with a key <= it) exceeds `budget`.
 
-    Pass 1 reads ONLY (order_col, debit inputs) — column pruning keeps it a
-    metadata-cheap scan — range-partitions on order_col, and aggregates one
-    (range_min, partial_sum) row per range. The driver folds those into
-    cumulative offsets (tiny collect: one row per partition). Pass 2 buckets
-    each row by the collected range minima (rows with equal order keys land
-    in one range, so bucketing reproduces the stats pass exactly), runs the
-    running sum as a window partitioned BY BUCKET — parallel, not global —
-    and adds the bucket's offset.
-
-    Bucket assignment is a BINARY SEARCH over the sorted range minima:
-    the minima + offset arrays ride in as ONE broadcast row (the repo's
-    scalar-broadcast idiom), and log2(ranges) chained projections halve the
-    candidate index. O(log ranges) per row with the arrays appearing ONCE
-    in the plan — the earlier O(ranges) higher-order filter embedded one
-    literal per range in the per-row predicate (round-3 advice).
+    Reads only the content-free (order_col, debit) projection:
+    1. stats pass — range-partition by key and collect one
+       (min key, max key, debit sum) row per range: one tiny collect, at
+       most 256 rows;
+    2. the driver folds the range sums in key order and picks the one
+       range where the budget is crossed;
+    3. the cut key is resolved inside that range alone. A range holding a
+       single key is the cut itself, with no job; otherwise the range's
+       rows with a non-zero debit are collected and folded per key. Equal
+       keys land in one range, so the resolve sees whole tie groups. Its
+       collect is one range's (key, size) pairs: about 1/n of the input
+       rows, n = min(spark.sql.shuffle.partitions, 256) ranges, plus any
+       tie group larger than that share.
+       The keys are ordered on the driver, so `order_col` must be a type
+       whose Python order is Spark's (strings, integers, dates,
+       timestamps — not floats with NaN).
     """
     spark = df.sparkSession
     try:
         n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     except (TypeError, ValueError):  # e.g. "auto" under some AQE configs
         n = 200
-    # Cap the range count: 256 ranges spread the window stage across 256
-    # tasks while keeping the stats collect and broadcast row tiny; the
-    # per-row cost is log2(256) = 8 probes regardless.
     n = max(2, min(n, 256))
+    key = F.col(order_col)
     stats = (
-        df.select(F.col(order_col).alias("_sv_o"), debit.alias("_sv_d"))
-        .repartitionByRange(n, "_sv_o")
-        .select("_sv_o", "_sv_d", F.spark_partition_id().alias("_sv_p"))
-        .groupBy("_sv_p")
-        .agg(F.min("_sv_o").alias("lo"), F.sum("_sv_d").alias("s"))
+        df.select(key.alias("k"), debit.alias("d"))
+        .repartitionByRange(n, "k")
+        .select("k", "d", F.spark_partition_id().alias("p"))
+        .groupBy("p")
+        .agg(
+            F.min("k").alias("lo"),
+            F.max("k").alias("hi"),
+            F.sum("d").alias("s"),
+            F.sum(F.when(F.col("k").isNull(), F.col("d"))).alias("null_s"),
+        )
         .collect()
     )
-    stats.sort(key=lambda r: r["_sv_p"])
-    offsets: list[tuple] = []  # (range_min, debit total of all earlier ranges)
-    cum = 0
+    stats.sort(key=lambda r: r["p"])
+    # null keys sort first (into the first range) and so debit first
+    running = sum(r["null_s"] or 0 for r in stats)
+    if running > budget:
+        return F.lit(True)
     for r in stats:
-        offsets.append((r["lo"], cum))
-        cum += r["s"] or 0
-    if len(offsets) <= 1:
-        # Degenerate corpus (one non-empty range): plain per-bucket window.
-        bucket: Column = F.lit(0)
-        offset: Column = F.lit(0).cast("long")
-    else:
-        from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-        lows = [lo for lo, _ in offsets[1:]]
-        offs = [int(off) for _, off in offsets]
-        # pad minima to a power of two with NULLs: every element_at probe
-        # stays in bounds (ANSI mode throws on overflow) and `NULL <= key`
-        # is NULL, which `when` treats as "don't advance".
-        pow2 = 1
-        while pow2 < len(lows):
-            pow2 *= 2
-        padded = lows + [None] * (pow2 - len(lows))
-        key_type = df.schema[order_col].dataType
-        aux = spark.createDataFrame(
-            [(padded, offs)],
-            StructType(
-                [
-                    StructField("_sv_lows", ArrayType(key_type), False),
-                    StructField("_sv_offs", ArrayType(LongType()), False),
-                ]
-            ),
-        )
-        df = df.crossJoin(F.broadcast(aux)).withColumn("_sv_idx", F.lit(0))
-        # invariant: _sv_idx = largest index such that lows[1.._sv_idx] are
-        # all <= key (0 = none). Each projection is tiny; codegen fuses the
-        # chain into one stage.
-        step = pow2 // 2
-        while step >= 1:
-            cand = F.col("_sv_idx") + F.lit(step)
-            df = df.withColumn(
-                "_sv_idx",
-                F.when(
-                    F.element_at(F.col("_sv_lows"), cand) <= F.col(order_col),
-                    cand,
-                ).otherwise(F.col("_sv_idx")),
-            )
-            step //= 2
-        bucket = F.col("_sv_idx")
-        offset = F.element_at(F.col("_sv_offs"), bucket + 1)
-    w = (
-        W.partitionBy(bucket)
-        .orderBy(order_col)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return df, F.sum(debit).over(w) + offset
+        s = (r["s"] or 0) - (r["null_s"] or 0)
+        if running + s <= budget:
+            running += s
+            continue
+        cut = r["lo"]
+        if r["lo"] != r["hi"]:
+            per_key: dict = {}
+            for k, d in (
+                df.filter(key.between(r["lo"], r["hi"]) & (debit > 0))
+                .select(key, debit)
+                .collect()
+            ):
+                per_key[k] = per_key.get(k, 0) + d
+            for cut in sorted(per_key):
+                running += per_key[cut]
+                if running > budget:
+                    break
+        return key >= F.lit(cut).cast(df.schema[order_col].dataType)
+    return F.lit(False)
 
 
 def with_format_validation(df: DataFrame, format_col: str = "format") -> DataFrame:

@@ -12,6 +12,7 @@ from docling_api_spark.pipeline.convert import (
     LightweightConverter,
     convert_documents,
 )
+from docling_api_spark.pipeline.export import export_results
 from docling_api_spark.sources.binaryfiles import read_documents
 from docling_api_spark.sources.validation import with_size_validation, split_valid
 
@@ -85,6 +86,33 @@ def test_metadata_only_plan_skips_content(spark, landing):
         .toString()
     )
     assert "content" not in plan
+
+
+def test_batch_request_is_one_narrow_wave(spark, tmp_path, landing):
+    # an input already within one wave is left as it is
+    small = convert_documents(read_documents(spark, landing))
+    assert "Coalesce" not in small._jdf.queryExecution().executedPlan().toString()
+
+    # Enough small files that the scan (each file padded to openCostInBytes)
+    # splits into more partitions than one wave of tasks.
+    dp = spark.sparkContext.defaultParallelism
+    n = 48 * dp
+    many = tmp_path / "many"
+    many.mkdir()
+    for i in range(n):
+        (many / f"doc{i:05d}.md").write_bytes(b"# doc %05d\n" % i)
+    docs = read_documents(spark, str(many))
+    assert docs.rdd.getNumPartitions() > dp
+    sizes = sorted(docs.select("path", "length").collect())
+    budget = sum(size for _, size in sizes[: n // 2])
+    accepted, _ = split_valid(
+        with_size_validation(docs, max_file_bytes=10_000, max_batch_bytes=budget)
+    )
+    out = export_results(convert_documents(accepted), "json")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert out.rdd.getNumPartitions() <= dp
+    assert sorted(r["path"] for r in out.collect()) == [p for p, _ in sizes[: n // 2]]
 
 
 def test_option_isolation_across_calls():

@@ -72,6 +72,9 @@ import pytest
         # spread exchange
         "q12_cube",
         "q144_part_supplier_stats",
+        # r16 opt-ins whose spread paths were otherwise unpinned
+        "q143_promo_share",
+        "q148_denorm_drift_audit",
     ],
 )
 def test_spread_query_results_bit_identical(spark, sf_dir, name):

@@ -3,6 +3,8 @@ tests/test_upload_limits.py onto the dataflow validators)."""
 
 from __future__ import annotations
 
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from docling_api_spark.sources.validation import (
@@ -17,6 +19,14 @@ from docling_api_spark.sources.validation import (
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "path string, length long, batch string")
+
+
+def _parallelized(spark, rows, parts):
+    """A narrow (exchange-free) input of `parts` partitions."""
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, parts),
+        "path string, length long, batch string",
+    )
 
 
 def _reasons(df):
@@ -115,34 +125,122 @@ def test_global_budget_prefix_sum_matches_sequential_debit(spark):
 
 
 def test_global_budget_no_single_partition_window(spark):
+    # The global budget must not funnel every row through one task (the old
+    # defect was a running-sum window with an empty partition spec). It is
+    # now a cut key found from metadata, so the returned plan is the input
+    # plus a narrow projection: no window and no exchange at all.
     rows = [(f"f{i:04d}.pdf", 100, "b1") for i in range(200)]
-    df = _df(spark, rows).repartition(8)
+    df = _parallelized(spark, rows, 8)
     out = with_size_validation(df, max_file_bytes=800, max_batch_bytes=5_000)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # the round-1 defect: partitionBy(lit(1)) folded to an empty partition
-    # spec ("Window [sum(...) ... ORDER BY ...]" with no PARTITION BY),
-    # funnelling everything into one task. The fix partitions the window by
-    # the range bucket.
-    import re
-
-    for m in re.finditer(r"Window \[[^\]]*windowspecdefinition\(([^)]*)\)", plan):
-        spec = m.group(1)
-        assert "_w" in spec or "bucket" in spec or spec.count(",") >= 2, plan
+    assert "Window" not in plan and "Exchange" not in plan, plan
+    assert "SinglePartition" not in plan, plan
 
 
 def test_global_budget_bucket_assignment_is_binary_search(spark):
-    # round-3 advice: the bucket assignment must NOT embed one literal per
-    # range in a per-row O(ranges) array filter. The binary-search rewrite
-    # carries the minima in ONE broadcast row and probes log2(ranges) times.
+    # Deciding which rows the budget rejects must not embed one literal per
+    # range in a per-row O(ranges) array filter. With the cut key the per-row
+    # work is a single comparison against one literal: no higher-order
+    # function, no per-range array, no helper column.
     rows = [(f"f{i:04d}.pdf", 100, "b1") for i in range(500)]
-    df = _df(spark, rows).repartition(8)
+    df = _parallelized(spark, rows, 8)
     out = with_size_validation(df, max_file_bytes=800, max_batch_bytes=5_000)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "_sv_lows" in plan  # minima ride in as a column, not a literal
-    # no higher-order filter over the minima anywhere in the plan
     assert "lambdafunction" not in plan.lower()
+    assert "array(" not in plan.lower()
+    assert "_sv_" not in plan
     # helper columns do not leak into the result schema
     assert not [c for c in out.columns if c.startswith("_sv_")]
+    # and the cut lands where the sequential debit says: 50 files fit
+    reasons = _reasons(out)
+    assert [p for p, _, _ in rows if reasons[p] is None] == [
+        p for p, _, _ in rows[:50]
+    ]
+
+
+def _sorted_reasons(reasons):
+    return sorted(reasons, key=lambda r: (r is not None, r or ""))
+
+
+def _sequential_debit(rows, max_file, budget):
+    """The reference read loop over key-sorted rows; rows with equal keys
+    are debited together (the documented tie rule)."""
+    groups: dict = {}
+    for path, size, _ in rows:
+        groups.setdefault(path, []).append(size)
+    out, running = {}, 0
+    for path in sorted(groups):
+        sizes = groups[path]
+        running += sum(s for s in sizes if s <= max_file)
+        out[path] = _sorted_reasons(
+            FILE_TOO_LARGE if s > max_file
+            else (BATCH_BUDGET_EXCEEDED if running > budget else None)
+            for s in sizes
+        )
+    return out
+
+
+def _reasons_by_key(df):
+    out: dict = {}
+    for r in df.collect():
+        out.setdefault(r["path"], []).append(r["reject_reason"])
+    return {k: _sorted_reasons(v) for k, v in out.items()}
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(0, 40), st.integers(0, 1_200)), max_size=60
+    ),
+    parts=st.integers(1, 8),
+    budget=st.integers(0, 40_000),
+    at_limit=st.none() | st.integers(0, 60),
+)
+@example(rows=[], parts=4, budget=100, at_limit=None)  # empty input
+@example(rows=[(k, 5_000) for k in range(20)], parts=7, budget=100, at_limit=None)
+# with the session's 8 ranges, the last admitted key (f009) and the first
+# rejected one (f010) share a range, so the resolve must find the cut
+@example(rows=[(k, 100) for k in range(30)], parts=5, budget=0, at_limit=10)
+def test_global_budget_matches_sequential_debit_property(
+    spark, rows, parts, budget, at_limit
+):
+    # random sizes (some oversized), duplicate keys, multi-partition input;
+    # with at_limit the budget is exactly the running total through that
+    # many key groups, so the last admitted group lands on the limit
+    max_file = 1_000
+    rows = [(f"f{k:03d}.pdf", size, "b") for k, size in rows]
+    keys = sorted({p for p, _, _ in rows})
+    if at_limit is not None and keys:
+        admitted = keys[: at_limit % len(keys)]
+        budget = sum(s for p, s, _ in rows if p in admitted and s <= max_file)
+    df = _parallelized(spark, rows, parts)
+    out = with_size_validation(df, max_file_bytes=max_file, max_batch_bytes=budget)
+    assert _reasons_by_key(out) == _sequential_debit(rows, max_file, budget)
+
+
+def test_global_budget_tied_keys_share_one_fate(spark):
+    # Three rows tie on the key at the cut: a(100), then b x3 (60 each).
+    # Debiting b's group takes the total to 280 > 250, so every b row is
+    # rejected — none is admitted on the strength of an arbitrary order.
+    rows = [("a.pdf", 100, "x"), ("b.pdf", 60, "x"), ("b.pdf", 60, "y"),
+            ("b.pdf", 60, "z"), ("c.pdf", 1, "x")]
+    out = with_size_validation(
+        _parallelized(spark, rows, 3), max_file_bytes=1000, max_batch_bytes=250
+    )
+    assert _reasons_by_key(out) == {
+        "a.pdf": [None],
+        "b.pdf": [BATCH_BUDGET_EXCEEDED] * 3,
+        "c.pdf": [BATCH_BUDGET_EXCEEDED],
+    }
+    # the group is admitted whole once it fits
+    out = with_size_validation(
+        _parallelized(spark, rows, 3), max_file_bytes=1000, max_batch_bytes=280
+    )
+    assert _reasons_by_key(out) == {
+        "a.pdf": [None],
+        "b.pdf": [None] * 3,
+        "c.pdf": [BATCH_BUDGET_EXCEEDED],
+    }
 
 
 def test_global_budget_empty_and_boundary_cases(spark):
